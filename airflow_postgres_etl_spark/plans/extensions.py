@@ -1123,7 +1123,9 @@ def q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
+    # fractional seconds, like the twin's epoch(): whole-second
+    # truncation (unix_timestamp) reads a 1800.4 s gap as 1800
+    gap = F.timestamp_diff("MICROSECOND", F.lag("ts").over(w), F.col("ts")) / 1e6
     return (
         events.withColumn("gap", gap)
         .groupBy("user_id")

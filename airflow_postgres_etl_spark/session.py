@@ -19,6 +19,29 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+#: File-count crossover between per-file metadata work done serially on
+#: the driver and the same work fanned out as a Spark job.  It governs
+#: both places the engine has such work: the commit path's parquet
+#: footer stats/row counts (``sink._file_stats``, ``sink._fill_row_counts``)
+#: and Spark's own file-status listing of an explicit file list
+#: (``spark.sql.sources.parallelPartitionDiscovery.threshold``, set in
+#: :func:`get_spark`).  Measured locally (SCALE.md, r9): one local-disk
+#: footer decode is ~80 µs (512 files = 41 ms serial) while a Spark job
+#: costs a flat ~230 ms, so on LOCAL paths the loop wins to ~3,000
+#: files.  The default of 256 instead caps the driver's serial work at
+#: ~20 ms: commits and scans of 256+ files run multi-second jobs, so the
+#: ≤0.2 s job overhead is noise there, and the cap protects the failure
+#: mode the executor leg exists for — an object-store deployment where a
+#: per-file open is a ms-class round trip and thousands of files would
+#: serialize into MINUTES on the driver (such a deployment lowers the
+#: env to ~16, its own crossover).  Below it, a read of a manifest's
+#: file list launches no listing job (Spark's default threshold of 32
+#: paths made every 64-bucket table scan pay one).  Tests force either
+#: leg of the footer pass by monkeypatching ``sink``'s binding.
+DISTRIBUTED_METADATA_MIN_FILES = int(
+    os.environ.get("SPARK_GRAFT_STATS_DISTRIBUTED_MIN_FILES", "256")
+)
+
 
 def get_spark(
     app_name: str = "airflow_postgres_etl_spark",
@@ -47,6 +70,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Spark lists in a job when paths > threshold; the footer pass
+        # goes executor-side at >= the crossover — same switch point
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(DISTRIBUTED_METADATA_MIN_FILES - 1),
+        )
         # testdata parquet stores TIMESTAMP(NANOS) which Spark's reader
         # rejects; read as long nanos, converted in sources.parquet_source
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

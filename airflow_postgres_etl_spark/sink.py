@@ -69,6 +69,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .session import DISTRIBUTED_METADATA_MIN_FILES
 from .storage import LOCAL_STORE, ConcurrentWriteError  # noqa: F401  (re-export)
 
 #: partition column holding the key-hash bucket; never exposed to readers
@@ -520,7 +521,7 @@ def _fill_row_counts(
     """Per-file row counts for the metadata-only COUNT(*) index — the
     second commit-path footer loop (after ``_file_stats``), given the
     same two legs: serial on the driver below
-    ``_STATS_DISTRIBUTED_MIN_FILES``, an executor-side map above it, so
+    ``DISTRIBUTED_METADATA_MIN_FILES``, an executor-side map above it, so
     adopting/committing thousands of files never serializes footer
     round-trips on the driver.  Uses the active session (commits always
     run inside one); falls back to the serial loop without one.
@@ -542,7 +543,7 @@ def _fill_row_counts(
     if not missing:
         return out
     spark = SparkSession.getActiveSession()
-    if spark is None or len(missing) < _STATS_DISTRIBUTED_MIN_FILES:
+    if spark is None or len(missing) < DISTRIBUTED_METADATA_MIN_FILES:
         out.update(_num_rows_serial(target, missing, store))
         return out
     sc = spark.sparkContext
@@ -879,24 +880,6 @@ def _hint_num_rows(path: str, n_rows: int) -> None:
     _NUM_ROWS_HINT[path] = n_rows
 
 
-#: File-count crossover between the serial driver footer loop and the
-#: executor-side map.  Measured locally (SCALE.md, r9): one local-disk
-#: footer decode is ~80 µs (512 files = 41 ms serial) while the RDD map
-#: costs a flat ~230 ms of job overhead — the same economics that made
-#: the r8 driver-side thread pool 4-8× WORSE — so on LOCAL paths the
-#: loop wins to ~3,000 files.  The default of 256 instead caps the
-#: driver's serial stats work at ~20 ms: commits of 256+ files have
-#: multi-second write jobs, so the ≤0.2 s job overhead is noise there,
-#: and the cap is what protects the failure mode this leg exists for —
-#: an object-store deployment where footer opens are ms-class round
-#: trips and a thousands-of-files commit would serialize into MINUTES
-#: on the driver (such a deployment lowers the env to ~16, its own
-#: crossover).  Tests force either leg by monkeypatching the constant.
-_STATS_DISTRIBUTED_MIN_FILES = int(
-    os.environ.get("SPARK_GRAFT_STATS_DISTRIBUTED_MIN_FILES", "256")
-)
-
-
 def _file_stats_serial(
     target: str, rel_paths: list[str], stats_cols: list[str], store=LOCAL_STORE
 ) -> dict[str, dict[str, list]]:
@@ -963,7 +946,7 @@ def _file_stats(
     change results).
 
     Two legs, same decode (:func:`_footer_stats_one`): a serial driver
-    loop below ``_STATS_DISTRIBUTED_MIN_FILES`` (a handful of local
+    loop below ``DISTRIBUTED_METADATA_MIN_FILES`` (a handful of local
     footer reads is far cheaper than a Spark job's fixed overhead) and
     an executor-side RDD map above it, so a thousands-of-files commit
     never serializes footer round-trips on the driver.  Footer opens go
@@ -976,7 +959,7 @@ def _file_stats(
     changes."""
     if (
         spark is not None
-        and len(rel_paths) >= _STATS_DISTRIBUTED_MIN_FILES
+        and len(rel_paths) >= DISTRIBUTED_METADATA_MIN_FILES
     ):
         return _file_stats_distributed(
             spark, target, rel_paths, stats_cols, store
@@ -1196,7 +1179,9 @@ def keyed_overwrite_parquet(
         # ADDITIVE schema evolution only (missing-column rejection and
         # type reconciliation already ran in _align_batch_types above,
         # against the FULL live schema).
-        keys = bucketed.select(key).distinct()
+        # no .distinct(): an anti-join ignores duplicate keys, and the
+        # dedup shuffle cost its own AQE job per merge
+        keys = bucketed.select(key)
         # anti-join on key: keep only rows NOT being replaced.  Spark
         # broadcasts `keys` when small; at 100 TB this is a shuffled hash
         # anti-join over k/N of the table — same cost class as the insert.
@@ -1526,30 +1511,42 @@ def _read_files(
     rel_files: list[str],
     schema=None,
 ) -> DataFrame:
-    # recursiveFileLookup: no partition-dir inference over per-commit
-    # `__bucket=` fragments; mergeSchema: union schema across additive
-    # column evolution (older files null-fill newer columns).
-    #
-    # ``schema`` (r11 optimization): the manifest-recorded union schema
-    # of the live files (see :func:`_schema_entry`).  When present the
-    # read is constructed with an EXPLICIT schema and no mergeSchema —
-    # zero footer reads, zero eager schema-inference Spark jobs per
-    # read (measured: every lifecycle query paid 4-21 such inferences).
-    # Equivalent by construction: per-column types are uniform across a
-    # table's live files (_align_batch_types conforms every batch before
-    # any file lands), so the only cross-file variance is column
-    # PRESENCE, and Spark's parquet reader null-fills requested columns
-    # absent from a file — exactly what a mergeSchema read yields.
+    """THE read of a resolved file list (table manifests and view
+    snapshots alike).  Zero-metadata-job contract: with ``schema`` given
+    and fewer than ``DISTRIBUTED_METADATA_MIN_FILES`` files, building the
+    frame launches no Spark job — the schema comes from the manifest
+    (no footer inference job) and Spark lists the explicit paths on the
+    driver (the session's listing threshold is that same crossover,
+    :mod:`.session`), so a query over the frame pays only its own jobs.
+    At or above the crossover the listing fans out as one job, the same
+    trade the commit path's footer pass makes.
+
+    recursiveFileLookup: no partition-dir inference over per-commit
+    ``__bucket=`` fragments.
+
+    ``schema`` (r11 optimization): the manifest-recorded union schema of
+    the live files (see :func:`_schema_entry`).  When present the read
+    is constructed with an EXPLICIT schema and no mergeSchema — zero
+    footer reads, zero eager schema-inference Spark jobs per read
+    (measured: every lifecycle query paid 4-21 such inferences).
+    Equivalent by construction: per-column types are uniform across a
+    table's live files (_align_batch_types conforms every batch before
+    any file lands), so the only cross-file variance is column PRESENCE,
+    and Spark's parquet reader null-fills requested columns absent from
+    a file — exactly what a mergeSchema read yields.  Without it (legacy
+    manifests and view metas) the read infers a mergeSchema union from
+    the footers, which costs one job."""
+    paths = [os.path.join(target, f) for f in rel_files]
     if schema is not None:
         return (
             spark.read.schema(schema)
             .option("recursiveFileLookup", "true")
-            .parquet(*[os.path.join(target, f) for f in rel_files])
+            .parquet(*paths)
         )
     return (
         spark.read.option("recursiveFileLookup", "true")
         .option("mergeSchema", "true")
-        .parquet(*[os.path.join(target, f) for f in rel_files])
+        .parquet(*paths)
     )
 
 
@@ -3437,12 +3434,26 @@ def lookup_keys(
     store=LOCAL_STORE,
 ) -> DataFrame:
     """Bucket-pruned point lookup — the read-side twin of the merge's
-    file pruning: hash the requested keys to their buckets (one
-    scalar-class job over ≤ len(keys) rows), open ONLY those buckets'
-    live files, then semi-join to the exact keys.  A k-key lookup on an
-    N-bucket table reads ~k/N of the files regardless of table size —
-    the difference between a point query and a table scan at 100 TB.
+    file pruning: hash the requested keys to their buckets, open ONLY
+    those buckets' live files, then semi-join to the exact keys.  A
+    k-key lookup on an N-bucket table reads ~k/N of the files regardless
+    of table size — the difference between a point query and a table
+    scan at 100 TB.
+
+    Zero-metadata-job contract: building the frame launches no Spark
+    job.  The keys become an Arrow-backed LOCAL frame
+    (``createDataFrame(pandas)``, a LocalRelation), so the bucket probe
+    collect is evaluated on the driver, and the bucket files are read
+    through :func:`_read_files` under the one listing crossover.  The
+    query itself costs the broadcast of the key frame plus the scan.
+    Measured (local[4] on 4 vCPUs, 64 buckets, 512 keys —
+    ``operators/text.py``'s id cap):
+    the semi-join over the local frame took 0.5-1.0 s where an
+    ``isin`` filter took 0.9-2.2 s, its literal-per-key plan building
+    outweighing the broadcast job it saves.
     """
+    import pandas as pd
+
     manifest = _load_manifest(target, store)
     if manifest is None:
         raise FileNotFoundError(f"no keyed table committed at {target}")
@@ -3451,13 +3462,16 @@ def lookup_keys(
         raise ValueError(f"{target} has a manifest but no bucket spec")
     key, num_buckets = spec["key"], spec["num_buckets"]
 
-    keys_df = spark.createDataFrame([(k,) for k in keys], [key])
-    # driver-side scalar collect of ≤ len(keys) ints — same class as
-    # the merge's affected-bucket probe; the hash MUST be computed by
-    # Spark (xxhash64's exact seed/variant), never reimplemented here.
-    # No .distinct(): keys is a driver-side list, so the probe would pay
-    # a full shuffle + an extra AQE job just to dedupe what this set
-    # comprehension dedupes for free (guide §2.4 — r11).
+    # object dtype: Arrow infers each key's type from the Python values
+    # (int -> long, str -> string, None -> null); a numeric pandas column
+    # would turn ints with a None into doubles, which hash differently
+    keys_df = spark.createDataFrame(
+        pd.DataFrame({key: pd.Series(list(keys), dtype=object)})
+    )
+    # driver-side scalar collect of ≤ len(keys) ints; the hash MUST be
+    # computed by Spark (xxhash64's exact seed/variant), never
+    # reimplemented here.  No .distinct(): the set comprehension dedupes
+    # for free (guide §2.4 — r11).
     wanted = {
         r[0]
         for r in keys_df.select(_bucket_expr(key, num_buckets)).collect()

@@ -50,8 +50,10 @@ from pyspark.sql import functions as F
 
 from .sink import (
     _load_manifest,
+    _manifest_schema,
     _mapping_of,
     _read_files,
+    _schema_entry,
     _to_logical_df,
     _version_manifest_path,
     read_keyed_table,
@@ -68,8 +70,6 @@ def _read_files_logical(spark, target, rel_files, manifest) -> DataFrame:
     breaks a refresh, while a rename of one of the view's OWN columns
     surfaces as an unresolved-column error (recreate the view), never a
     silently re-labeled aggregate (the freed-name-reuse hazard)."""
-    from .sink import _manifest_schema
-
     return _to_logical_df(
         _read_files(
             spark, target, rel_files, schema=_manifest_schema(manifest)
@@ -726,6 +726,9 @@ def _write_view(
             "data": rel,
             "group_cols": list(group_cols),
             "sum_cols": list(sum_cols),
+            # the snapshot's schema, in the manifest entry form: reads
+            # need no footer inference (_read_view_frame)
+            "schema": _schema_entry(view_df.schema),
             **(meta_extra or {}),
         },
     )
@@ -752,19 +755,18 @@ def _write_view(
 
 
 def _read_view_frame(spark, mv_path, store) -> DataFrame:
-    # resolve the snapshot's file listing through the store (an object
-    # store's prefix listing), handing Spark explicit file paths — the
-    # raw-directory read bypassed the seam (VERDICT r7 residual 3)
+    """The current view snapshot, read through :func:`sink._read_files`
+    under the same zero-metadata-job contract as a table read: the
+    snapshot's file listing resolves through the store (an object
+    store's prefix listing — the raw-directory read bypassed the seam,
+    VERDICT r7 residual 3) and its schema comes from the meta, so
+    building the frame launches no Spark job below the one listing
+    crossover.  A meta written before the schema entry keeps the footer
+    inference (one job), like a legacy table manifest."""
     meta = store.read_json(_meta_path(mv_path))
     data_dir = os.path.join(mv_path, meta["data"])
-    files = [
-        os.path.join(data_dir, f)
-        for f in store.list_dir(data_dir)
-        if f.endswith(".parquet")
-    ]
-    if not files:  # schema-bearing empty snapshot (zero-group view)
-        return spark.read.parquet(data_dir)
-    return spark.read.parquet(*files)
+    files = [f for f in store.list_dir(data_dir) if f.endswith(".parquet")]
+    return _read_files(spark, data_dir, files, schema=_manifest_schema(meta))
 
 
 def read_aggregate_view(

@@ -16,7 +16,9 @@ SF_CORRECT = "/root/testdata/sf0.01"
 #: listed in fulltier_ids.txt (every test that measured >= ~10 s in the
 #: full-suite baseline — long equivalence sweeps, crash matrices, the
 #: README journey); the builder runs the FULL tier
-#: (`SPARK_GRAFT_FULL_TESTS=1 pytest tests/`) before committing.
+#: (`SPARK_GRAFT_FULL_TESTS=1 pytest tests/`) before committing.  A
+#: full-tier test named by nodeid on the command line runs in either
+#: tier (`pytest tests/test_x.py::test_y`).
 #: Coverage note: every operator keeps its fast oracle/unit pins in the
 #: default tier, and the driver's own 50-query sf0.01 differential runs
 #: independently of pytest.
@@ -41,11 +43,29 @@ def pytest_collection_modifyitems(config, items):
     skip = pytest.mark.skip(
         reason="full tier: run with SPARK_GRAFT_FULL_TESTS=1"
     )
+    named = _named_nodeids(config)
+    inside_named = tuple(n + sep for n in named for sep in ("[", "::"))
     for item in items:
+        if item.nodeid in named or item.nodeid.startswith(inside_named):
+            continue  # asked for by nodeid on the command line: run it
         if item.nodeid in ids or (
             prefixes and item.nodeid.startswith(prefixes)
         ):
             item.add_marker(skip)
+
+
+def _named_nodeids(config) -> set[str]:
+    """Node ids named on the command line (``path::name`` arguments),
+    made rootdir-relative like ``item.nodeid``.  A named node runs with
+    what it contains (parametrized cases, a class's tests); a file or
+    directory argument names no test."""
+    out = set()
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if sep:
+            rel = os.path.relpath(os.path.abspath(path), str(config.rootpath))
+            out.add(f"{rel.replace(os.sep, '/')}::{rest}")
+    return out
 
 
 @pytest.fixture(scope="session")

@@ -299,33 +299,39 @@ def test_legacy_band_key_index_reads_and_appends_compatibly(
     assert got2 == set()
 
 
-def test_band_hi_lo_bijection_roundtrips_md5():
+def test_band_hi_lo_bijection_roundtrips_md5(spark):
     """The (hi, lo) signed-long decomposition must be an exact bijection
     with the 32-char md5 hex — equality on the longs IS equality on the
-    string, which is what keeps every candidate set unchanged."""
+    string, which is what keeps every candidate set unchanged.  Evaluates
+    the engine's own Spark expressions: ``_band_hi_lo`` splits, and
+    ``_legacy_band_key`` (the format-1 append conformance) rebuilds."""
     import hashlib
+
+    from pyspark.sql import functions as F
 
     import airflow_postgres_etl_spark.operators.dedup as D
 
-    def py_hi_lo(h: str) -> tuple[int, int]:
-        def signed(x: int) -> int:
-            return x - (1 << 64) if x >= (1 << 63) else x
+    def signed(x: int) -> int:
+        return x - (1 << 64) if x >= (1 << 63) else x
 
-        return signed(int(h[:16], 16)), signed(int(h[16:], 16))
-
-    def py_back(hi: int, lo: int) -> str:
-        return f"{hi & (2**64 - 1):016x}{lo & (2**64 - 1):016x}"
-
-    for s in [b"", b"a", b"band|0|1", b"\xff" * 33, b"edge"]:
-        h = hashlib.md5(s).hexdigest()
-        hi, lo = py_hi_lo(h)
-        assert py_back(hi, lo) == h
-    # boundary patterns (min/max long, all-zero, all-one halves)
-    for h in [
+    hexes = [
+        hashlib.md5(s).hexdigest()
+        for s in [b"", b"a", b"band|0|1", b"\xff" * 33, b"edge"]
+    ] + [
+        # boundary patterns (min/max long, all-zero, all-one halves)
         "0" * 32,
         "f" * 32,
         "8000000000000000" + "7fffffffffffffff",
         "7fffffffffffffff" + "8000000000000000",
-    ]:
-        hi, lo = py_hi_lo(h)
-        assert py_back(hi, lo) == h
+    ]
+    hi, lo = D._band_hi_lo(F.col("h"))
+    split = spark.createDataFrame([(h,) for h in hexes], "h string").select(
+        "h", hi.alias("hi"), lo.alias("lo")
+    )
+    back = split.select(
+        "h", "hi", "lo", D._legacy_band_key(F.col("hi"), F.col("lo")).alias("back")
+    ).collect()
+    assert len(back) == len(hexes)
+    for r in back:
+        assert (r.hi, r.lo) == (signed(int(r.h[:16], 16)), signed(int(r.h[16:], 16)))
+        assert r.back == r.h

@@ -182,6 +182,39 @@ def test_lookup_keys_sees_delta_rows(spark, tmp_path):
     got = {(r.oid__id, r.v) for r in lookup_keys(spark, target, ["k3", "k4"]).collect()}
     assert got == {("k3", 333), ("k4", 4)}
 
+    # string, int and long key columns: a dirty bucket's key, clean keys
+    # and a missing key return exactly what a full scan filtered to the
+    # keys returns (the probe hashes Python ints as long; an int column
+    # hashes the same digits)
+    for typ, keys in [
+        ("string", ["k3", "k7", "k49", "missing"]),
+        ("int", [3, 7, 49, 1000]),
+        ("long", [3, 7, 2**40 + 49, 2**41]),
+    ]:
+        t = str(tmp_path / f"typed_{typ}")
+        ids = keys[:3] + [
+            (f"k{i}" if typ == "string" else i) for i in range(50)
+        ]
+        base = spark.createDataFrame(
+            [(k, n) for n, k in enumerate(dict.fromkeys(ids))],
+            f"id {typ}, v long",
+        )
+        keyed_overwrite_parquet(spark, base, t, key="id")
+        keyed_merge_mor(
+            spark,
+            spark.createDataFrame([(keys[0], -1), (keys[0], -2)], f"id {typ}, v long"),
+            t, key="id",
+        )
+        assert table_delta_depth(t) >= 1
+        got = sorted(tuple(r) for r in lookup_keys(spark, t, keys).collect())
+        want = sorted(
+            tuple(r)
+            for r in read_keyed_table(spark, t).collect()
+            if r.id in keys
+        )
+        assert got == want and {r[0] for r in got} == set(keys[:3]), typ
+        assert sorted(v for k, v in got if k == keys[0]) == [-2, -1]
+
 
 def test_time_travel_across_mor_commits(spark, tmp_path):
     target = str(tmp_path / "t")

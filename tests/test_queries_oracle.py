@@ -65,6 +65,37 @@ def test_session_window_exact_boundary(spark, tmp_path):
     assert len(starts) == 2  # exactly-1800 gap merged; 1801 split
 
 
+def test_user_sessions_subsecond_gap(spark, tmp_path):
+    """``q_user_sessions`` splits on a gap STRICTLY over 1800 s measured
+    with its fractional part.  Events at t0+0.6 s, then +1800.3 s (new
+    session — whole-second truncation read 1800 and merged it), then
+    exactly +1800.0 s with the same fraction (same session), then
+    +1799.9 s (same session), against the DuckDB twin."""
+    import datetime as dt
+
+    import duckdb
+
+    base = dt.datetime(2024, 1, 1, 0, 0, 0, 600000)
+    offsets = [0.0, 1800.3, 1800.3 + 1800.0, 1800.3 + 1800.0 + 1799.9]
+    rows = [
+        (i, base + dt.timedelta(seconds=off), 7, "click", 1.0, "{}")
+        for i, off in enumerate(offsets)
+    ]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE events (event_id BIGINT, ts TIMESTAMP, user_id BIGINT,"
+        " event_type VARCHAR, value DOUBLE, props VARCHAR)"
+    )
+    con.executemany("INSERT INTO events VALUES (?, ?, ?, ?, ?, ?)", rows)
+    path = str(tmp_path / "events.parquet")
+    con.execute(f"COPY events TO '{path}' (FORMAT PARQUET)")
+    con.close()
+
+    spark_df = QUERIES["q_user_sessions"](spark, str(tmp_path))
+    compare(spark_df, run_oracle(ORACLE["q_user_sessions"], str(tmp_path)))
+    assert [(r.n_sessions, r.n_events) for r in spark_df.collect()] == [(2, 4)]
+
+
 def test_compare_rejects_dtype_class_drift(spark):
     """Regression for the round-5 blind spot: DuckDB's windowed ``sum(BIGINT)``
     returns HUGEINT, which pandas materializes as float64, so the driver's

@@ -939,7 +939,7 @@ def test_large_commit_stats_zero_driver_footer_reads(
     )
     from airflow_postgres_etl_spark.storage import LOCAL_STORE
 
-    monkeypatch.setattr(sink, "_STATS_DISTRIBUTED_MIN_FILES", 2)
+    monkeypatch.setattr(sink, "DISTRIBUTED_METADATA_MIN_FILES", 2)
 
     def no_driver_reads(*a, **k):
         raise AssertionError("driver-side footer read on the hot path")
@@ -1097,7 +1097,7 @@ def test_optimize_stats_zero_driver_footer_reads(spark, tmp_path, monkeypatch):
             target, verify_new=False,
         )
 
-    monkeypatch.setattr(sink, "_STATS_DISTRIBUTED_MIN_FILES", 2)
+    monkeypatch.setattr(sink, "DISTRIBUTED_METADATA_MIN_FILES", 2)
 
     def no_driver_reads(*a, **k):
         raise AssertionError("driver-side footer read on the optimize path")
